@@ -189,8 +189,8 @@ PIPELINES = [
     "ingest_accept_batch",
     "ingest_two_batch",
     # r10: the PRODUCTION admission shape — probes PERSISTED indexes.
-    # run_full clears only _MANIFEST_CACHE; the index build memo
-    # (_INGEST_INDEX_CACHE) survives across runs, so this row times
+    # run_full clears only _MANIFEST_CACHE; the index build (the
+    # session store's "ingest-idx" artifact) survives across runs, so this row times
     # the per-batch PROBE while the corpus-scale index derivation
     # (the scheduled nightly build) is excluded — the cost split the
     # r9 verdict asked BENCH to show (vs ingest_accept_batch, which

@@ -6,7 +6,8 @@ Streaming) — NOT a port of the reference's DataStream code. See
 SURVEY.md for the capability inventory this package implements.
 
 Layout:
-    session.py    SparkSession builder tuned for the testdata + scale posture
+    session.py    SparkSession builder tuned for the testdata + scale posture,
+                  and the session artifact store (memos + scratch dirs)
     io.py         table loading / event-time normalization
     operators/    batch implementations of every SURVEY §2 capability
                   (+ §2.10 LLM-pipeline: text, similarity, multimodal)

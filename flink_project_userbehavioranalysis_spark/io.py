@@ -19,6 +19,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
+
 TABLES = [
     "region",
     "nation",
@@ -35,30 +37,23 @@ TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (application-id, abspath) → persisted normalized events DataFrame.
-# Keyed on sparkContext.applicationId, not id(spark): CPython can
-# recycle an id() after a stopped session is garbage-collected, which
-# would silently hand back frames bound to a dead session.
-# Populated only via cache_events(); load_events() consults it so a
-# bench/driver harness can share ONE in-memory scan across queries
-# without changing any operator signature. At 100 TB the analog is a
-# materialized normalized table (or a cached scan across a query batch),
-# not per-query re-parsing of props JSON.
-_EVENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cache_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persist the normalized events scan and reuse it in load_events."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _EVENTS_CACHE:
+    """Persist the normalized events scan and reuse it in load_events,
+    so a bench/driver harness can share ONE in-memory scan across
+    queries without changing any operator signature. At 100 TB the
+    analog is a materialized normalized table (or a cached scan across
+    a query batch), not per-query re-parsing of props JSON."""
+
+    def build(_path: str) -> DataFrame:
         df = load_events(spark, sf_dir).persist()
         df.count()  # materialize eagerly so first benched query isn't charged
-        _EVENTS_CACHE[key] = df
-    return _EVENTS_CACHE[key]
+        return df
+
+    return ARTIFACTS.get(spark, "events", sf_dir, None, build)
 
 
 def uncache_events(spark: SparkSession, sf_dir: str) -> None:
-    df = _EVENTS_CACHE.pop((spark.sparkContext.applicationId, os.path.abspath(sf_dir)), None)
+    df = ARTIFACTS.pop(spark, "events", sf_dir)
     if df is not None:
         df.unpersist()
 
@@ -168,9 +163,9 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     string), item_id (INT, parsed from props.k — the reference's itemId
     analog, FIXTURES.md §B).
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key in _EVENTS_CACHE:
-        return _EVENTS_CACHE[key]
+    cached = ARTIFACTS.peek(spark, "events", sf_dir)
+    if cached is not None:
+        return cached
     return normalize_events(load_table(spark, sf_dir, "events"))
 
 

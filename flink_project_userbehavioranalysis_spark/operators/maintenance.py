@@ -32,10 +32,6 @@ copy against the raw-table oracle.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -48,18 +44,8 @@ from flink_project_userbehavioranalysis_spark.operators.network_flow import (
     # an oracle fix there fixes both
 )
 from flink_project_userbehavioranalysis_spark.operators.network_flow import pv_rollup_frame
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
 
-
-def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Session-keyed scratch path (same keying as io._EVENTS_CACHE):
-    repeat invocations in one session — the oracle gate, bench loops,
-    repeated tests — REUSE and overwrite one directory per (query,
-    sf_dir) instead of mkdtemp-leaking a parquet copy per call."""
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"ubx-maint-{app}-{tag}-{h}")
-    os.makedirs(path, exist_ok=True)
-    return path
 
 # Read-back schema for the PV materialized view: explicit, so an
 # empty view (zero files yet) reads as an empty frame instead of a
@@ -113,7 +99,7 @@ def mv_pv_hourly_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxd = ev.agg(F.max(F.to_date("ts"))).collect()[0][0]
     if maxd is None:  # empty input: an empty view, total by construction
         return spark.createDataFrame([], _MV_SCHEMA).select("window_end", "pv")
-    path = _scratch_dir(spark, "mv", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "mv", sf_dir)
     hist = ev.filter(F.to_date("ts") < F.lit(maxd))
     delta = ev.filter(F.to_date("ts") >= F.lit(maxd))
     build_mv(_hourly_pv(hist), path)
@@ -122,7 +108,7 @@ def mv_pv_hourly_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema(_MV_SCHEMA).parquet(path)
     # eager localCheckpoint decouples the returned frame from the
     # scratch files: the next invocation OVERWRITES the reused dir
-    # (see _scratch_dir), which would otherwise invalidate a result a
+    # (ArtifactStore.scratch_dir), which would otherwise invalidate a result a
     # caller is still holding. The view is aggregate-cardinality
     # (hours), so the pinned blocks are tiny.
     return back.select("window_end", "pv").localCheckpoint(eager=True)
@@ -139,8 +125,8 @@ def compact_roundtrip(
     rewrite lost/duplicated nothing. File-count mechanics are asserted
     in tests/test_maintenance.py."""
     ev = load_events(spark, sf_dir).select("user_id", "item_id", "event_type", "ts")
-    frag = _scratch_dir(spark, "frag", sf_dir)
-    comp = _scratch_dir(spark, "comp", sf_dir)
+    frag = ARTIFACTS.scratch_dir(spark, "frag", sf_dir)
+    comp = ARTIFACTS.scratch_dir(spark, "comp", sf_dir)
     ev.repartition(shatter).write.mode("overwrite").parquet(frag)
     layout.compact_small_files(spark, frag, comp, target_bytes=target_bytes)
     return (
@@ -195,7 +181,7 @@ def erase_users_roundtrip(
     # rows from BOTH the kept rewrite and the audit (deleting data
     # never listed for erasure, invisibly to the hash check)
     erased = F.coalesce(F.col("user_id") % int(modulus) == 0, F.lit(False))
-    path = _scratch_dir(spark, "erase", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "erase", sf_dir)
     ev.filter(~erased).write.mode("overwrite").parquet(path)
     audit = (
         ev.filter(erased)
@@ -364,7 +350,7 @@ def user_tier_scd2_maintain(
     empty = spark.createDataFrame([], _SCD2_SCHEMA).select(*_SCD2_COLS[:5])
     if maxd is None:
         return empty
-    path = _scratch_dir(spark, "scd2", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "scd2", sf_dir)
     hist = ev.filter(F.to_date("ts") < F.lit(maxd))
     (
         _scd2_from_daily(_daily_counts(hist), with_meta=True)
@@ -506,7 +492,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_dir(spark, "jsonl", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "jsonl", sf_dir)
     write_docs_jsonl(docs, path)
     clean, _bad = split_quarantine(read_docs_jsonl(spark, path))
     chk = _row_chk()
@@ -581,7 +567,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — one checksum definition certifies every interchange
     format the engine claims."""
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_dir(spark, "orc", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "orc", sf_dir)
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(
         "doc_id BIGINT, text STRING, lang STRING, source STRING"
@@ -633,7 +619,7 @@ def export_shards_roundtrip(
         "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
     )
     planned = order.join(toks, "doc_id")
-    out = _scratch_dir(spark, "shards", sf_dir)
+    out = ARTIFACTS.scratch_dir(spark, "shards", sf_dir)
     planned.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out).withColumn(
         # hive partition-value inference types the shard dir as INT;

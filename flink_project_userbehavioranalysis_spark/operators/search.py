@@ -42,6 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
 
 #: Ranked-retrieval query set (conjunctive AND; terms distinct per
 #: query). Query 3 includes the corpus's one rare term ('dup', df≈25
@@ -213,10 +214,20 @@ def _rank_query_frame(
     )
 
 
-#: Session-keyed scratch roots for the persisted postings index (the
-#: nightly-build memo; the ingest _INGEST_INDEX_CACHE discipline).
-#: Values: a root path (full build) or a (base, overlay) pair (split).
-_FTS_INDEX_CACHE: dict[tuple, object] = {}
+def _write_fts_tree(root: str, docs: DataFrame) -> None:
+    """Write one index tree for ``docs``: the postings relation
+    PARTITIONED BY TERM, the term dictionary (term, df), and the 1-row
+    doc count."""
+    post = _postings(docs)
+    post.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
+        "term"
+    ).parquet(f"{root}/postings")
+    post.groupBy("term").agg(F.count("*").alias("df")).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/dict")
+    docs.agg(F.count("*").alias("n_docs")).write.mode("overwrite").parquet(
+        f"{root}/n"
+    )
 
 
 def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
@@ -229,28 +240,12 @@ def build_fts_index(spark: SparkSession, sf_dir: str) -> str:
     tests/test_search.py) — at 100 TB vocabulary you'd bucketBy(term)
     instead and get the same pruned probe. Memoized per (app, sf_dir);
     production runs this as a scheduled job."""
-    import os as _os
 
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
+    def build(root: str) -> str:
+        _write_fts_tree(root, _docs(spark, sf_dir))
+        return root
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _docs(spark, sf_dir)
-    post = _postings(docs)
-    root = _scratch_dir(spark, "fts-idx", sf_dir)
-    post.write.mode("overwrite").partitionBy("term").parquet(f"{root}/postings")
-    post.groupBy("term").agg(F.count("*").alias("df")).write.mode(
-        "overwrite"
-    ).parquet(f"{root}/dict")
-    docs.agg(F.count("*").alias("n_docs")).write.mode("overwrite").parquet(
-        f"{root}/n"
-    )
-    _FTS_INDEX_CACHE[key] = root
-    return root
+    return ARTIFACTS.get(spark, "fts-idx", sf_dir, None, build)
 
 
 #: The persisted postings layout (data cols + the `term` partition
@@ -276,23 +271,42 @@ def _read_term_partitioned(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _read_fts(spark: SparkSession, *roots: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(postings, dict, n) of one index tree, or of several read as ONE
+    logical index: postings unioned (each scan keeps its own
+    planning-time partition pruning), the dictionary and doc count
+    merged by integer SUM — exact, because df/N are mergeable summaries
+    over disjoint immutable doc sets, and KB-scale, so the merge never
+    touches the corpus."""
+    post = _read_term_partitioned(spark, f"{roots[0]}/postings")
+    for r in roots[1:]:
+        post = post.unionByName(_read_term_partitioned(spark, f"{r}/postings"))
+    dic = spark.read.schema("term STRING, df BIGINT").parquet(*[f"{r}/dict" for r in roots])
+    n = spark.read.schema("n_docs BIGINT").parquet(*[f"{r}/n" for r in roots])
+    if len(roots) > 1:
+        dic = dic.groupBy("term").agg(F.sum("df").alias("df"))
+        n = n.agg(F.sum("n_docs").alias("n_docs"))
+    return post, dic, n
+
+
+def _probe_fts(spark: SparkSession, roots, k: int) -> DataFrame:
+    """Conjunctive top-k over persisted index tree(s). The query terms
+    are literals, so the probe applies a static IN-list filter that the
+    planner turns into partition pruning — the scan touches only the
+    queried terms' partitions, never the corpus."""
+    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
+    post, dic, n = _read_fts(spark, *roots)
+    return _rank_conjunctive(spark, post.filter(F.col("term").isin(terms)), dic, n, k)
+
+
 def fts_topk_indexed(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     """PRODUCTION cost shape of :func:`fts_topk`: probe the PERSISTED
-    postings index instead of deriving it in-query. The query terms
-    are literals, so the probe applies a static IN-list filter that
-    the planner turns into partition pruning — the scan touches only
-    the queried terms' partitions, never the corpus. Content-equal to
-    the derive form by construction (one `_postings` definition), so
-    it shares the same oracle; cost ∝ postings of the queried terms,
-    not ∝ corpus."""
-    root = build_fts_index(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = _read_term_partitioned(spark, f"{root}/postings").filter(
-        F.col("term").isin(terms)
-    )
-    dic = spark.read.parquet(f"{root}/dict")
-    n = spark.read.parquet(f"{root}/n")
-    return _rank_conjunctive(spark, post, dic, n, k)
+    postings index instead of deriving it in-query (partition-pruned to
+    the queried terms, see :func:`_probe_fts`). Content-equal to the
+    derive form by construction (one `_postings` definition), so it
+    shares the same oracle; cost ∝ postings of the queried terms, not
+    ∝ corpus."""
+    return _probe_fts(spark, [build_fts_index(spark, sf_dir)], k)
 
 
 #: Corpus/batch split for the maintained-index lifecycle (every fifth
@@ -312,36 +326,15 @@ def build_fts_index_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Probes read base ∪ overlay as one logical index. Memoized per
     (app, sf_dir); production runs the base build as a scheduled job
     and the overlay commit inside each admission run."""
-    import os as _os
 
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
+    def build(root: str) -> tuple[str, str]:
+        docs = _docs(spark, sf_dir)
+        base, overlay = f"{root}/base", f"{root}/overlay"
+        _write_fts_tree(base, docs.filter(F.col("doc_id") % _FTS_SPLIT_MOD != 0))
+        _write_fts_tree(overlay, docs.filter(F.col("doc_id") % _FTS_SPLIT_MOD == 0))
+        return base, overlay
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "split")
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = _docs(spark, sf_dir)
-    roots = []
-    for tag, pred in (
-        ("base", F.col("doc_id") % _FTS_SPLIT_MOD != 0),
-        ("overlay", F.col("doc_id") % _FTS_SPLIT_MOD == 0),
-    ):
-        part = docs.filter(pred)
-        post = _postings(part)
-        root = _scratch_dir(spark, f"fts-{tag}", sf_dir)
-        post.write.mode("overwrite").partitionBy("term").parquet(f"{root}/postings")
-        post.groupBy("term").agg(F.count("*").alias("df")).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/dict")
-        part.agg(F.count("*").alias("n_docs")).write.mode("overwrite").parquet(
-            f"{root}/n"
-        )
-        roots.append(root)
-    out = (roots[0], roots[1])
-    _FTS_INDEX_CACHE[key] = out
-    return out
+    return ARTIFACTS.get(spark, "fts-split", sf_dir, None, build)
 
 
 def fts_topk_maintained(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
@@ -356,25 +349,7 @@ def fts_topk_maintained(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
     contract applied to the search pillar. Probe cost shape identical
     to :func:`fts_topk_indexed`: both scans partition-prune to the
     queried terms."""
-    base, overlay = build_fts_index_split(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = (
-        _read_term_partitioned(spark, f"{base}/postings")
-        .unionByName(_read_term_partitioned(spark, f"{overlay}/postings"))
-        .filter(F.col("term").isin(terms))
-    )
-    dic = (
-        spark.read.schema("term STRING, df BIGINT")
-        .parquet(f"{base}/dict", f"{overlay}/dict")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    n = (
-        spark.read.schema("n_docs BIGINT")
-        .parquet(f"{base}/n", f"{overlay}/n")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
-    return _rank_conjunctive(spark, post, dic, n, k)
+    return _probe_fts(spark, build_fts_index_split(spark, sf_dir), k)
 
 
 def compact_fts_index(spark: SparkSession, sf_dir: str) -> str:
@@ -393,41 +368,17 @@ def compact_fts_index(spark: SparkSession, sf_dir: str) -> str:
     sf_dir); the layout invariant (single tree, no overlay) and the
     postings-multiset identity vs base ∪ overlay are pinned in
     tests/test_search.py."""
-    import os as _os
 
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
+    def build(root: str) -> str:
+        post, dic, n = _read_fts(spark, *build_fts_index_split(spark, sf_dir))
+        post.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
+            "term"
+        ).parquet(f"{root}/postings")
+        dic.write.mode("overwrite").parquet(f"{root}/dict")
+        n.write.mode("overwrite").parquet(f"{root}/n")
+        return root
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "compact")
-    cached = _FTS_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base, overlay = build_fts_index_split(spark, sf_dir)
-    root = _scratch_dir(spark, "fts-compacted", sf_dir)
-    merged = _read_term_partitioned(spark, f"{base}/postings").unionByName(
-        _read_term_partitioned(spark, f"{overlay}/postings")
-    )
-    merged.select("doc_id", "tf", "term").write.mode("overwrite").partitionBy(
-        "term"
-    ).parquet(f"{root}/postings")
-    (
-        spark.read.schema("term STRING, df BIGINT")
-        .parquet(f"{base}/dict", f"{overlay}/dict")
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .write.mode("overwrite")
-        .parquet(f"{root}/dict")
-    )
-    (
-        spark.read.schema("n_docs BIGINT")
-        .parquet(f"{base}/n", f"{overlay}/n")
-        .agg(F.sum("n_docs").alias("n_docs"))
-        .write.mode("overwrite")
-        .parquet(f"{root}/n")
-    )
-    _FTS_INDEX_CACHE[key] = root
-    return root
+    return ARTIFACTS.get(spark, "fts-compacted", sf_dir, None, build)
 
 
 def fts_topk_compacted(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
@@ -438,14 +389,7 @@ def fts_topk_compacted(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFra
     under the FULL-REBUILD oracle, so the scoreboard hash proves
     compacted ≡ maintained ≡ rebuilt — compaction changes the LAYOUT,
     never the relation."""
-    root = compact_fts_index(spark, sf_dir)
-    terms = sorted({t for _qid, s in FTS_QUERIES for t in s.split()})
-    post = _read_term_partitioned(spark, f"{root}/postings").filter(
-        F.col("term").isin(terms)
-    )
-    dic = spark.read.parquet(f"{root}/dict")
-    n = spark.read.parquet(f"{root}/n")
-    return _rank_conjunctive(spark, post, dic, n, k)
+    return _probe_fts(spark, [compact_fts_index(spark, sf_dir)], k)
 
 
 def _fts_ranked_cte() -> str:

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, spread_light
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
 
 # --------------------------------------------------------------- shared prep
 
@@ -67,9 +68,6 @@ def _shingles(df: DataFrame, n: int) -> DataFrame:
 # ----------------------------------------------------------- exact kNN (brute)
 
 
-_CORPUS_CACHE: dict[tuple, object] = {}
-
-
 def _corpus_broadcast(spark: SparkSession, sf_dir: str):
     """(ids, matrix, norms) of the whole embeddings table as a Spark
     broadcast — the vector twin of a broadcast join's build side. Used
@@ -79,26 +77,23 @@ def _corpus_broadcast(spark: SparkSession, sf_dir: str):
     (`ann_lsh_topk`, `ivf_topk`) never touch this — they score via
     distributed joins back to the embeddings table (see
     `_score_candidates`), asserted by a test that stubs this function
-    out. Cached per (application, dir): repeated queries reuse one
-    driver collect + one broadcast; keyed on the Spark application id
-    (stable identity — `id(spark)` can be recycled by CPython after a
-    session is garbage-collected)."""
-    import numpy as np
+    out. Memoized in the session store: repeated queries reuse one
+    driver collect + one broadcast."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CORPUS_CACHE:
-        return _CORPUS_CACHE[key]
-    rows = (
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    if mat.ndim < 2:  # empty corpus: keep 2-D so axis-1 ops stay valid
-        mat = mat.reshape(0, 0)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
-    _CORPUS_CACHE[key] = bc
-    return bc
+    def build(_path: str):
+        import numpy as np
+
+        rows = (
+            load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").collect()
+        )
+        ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+        mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        if mat.ndim < 2:  # empty corpus: keep 2-D so axis-1 ops stay valid
+            mat = mat.reshape(0, 0)
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        return spark.sparkContext.broadcast((ids, mat, norms))
+
+    return ARTIFACTS.get(spark, "corpus", sf_dir, None, build)
 
 
 def knn_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -653,12 +648,6 @@ def pq_topk(
 
 # --------------------------------------- ANN: persisted IVF/IVF-PQ index
 
-#: (appId, sf_dir, params) -> scratch root of the persisted ANN index.
-#: The nightly-build memo (the ingest _INGEST_INDEX_CACHE discipline):
-#: NOT cleared between probe runs — that separation is the point.
-_ANN_INDEX_CACHE: dict[tuple, str] = {}
-
-
 def build_ann_index(
     spark: SparkSession,
     sf_dir: str,
@@ -685,31 +674,20 @@ def build_ann_index(
     encode happens once per build, and every query-time probe touches
     only the (narrow) inverted lists — never re-encodes the corpus.
     Memoized per (app, sf_dir, params)."""
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
 
-    key = (
-        spark.sparkContext.applicationId,
-        __import__("os").path.abspath(sf_dir),
-        n_cells,
-        m_sub,
-        n_codes,
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    sample = _sample_matrix(spark, sf_dir)
-    cents = _ivf_centroids(sample, n_cells)
-    books = _pq_codebooks(sample, m_sub, n_codes)
-    root = _scratch_dir(spark, "ann-idx", sf_dir)
-    _write_model_tables(spark, root, cents, books)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _encode_with_models(emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{root}/enc")
-    _ANN_INDEX_CACHE[key] = root
-    return root
+    def build(root: str) -> str:
+        sample = _sample_matrix(spark, sf_dir)
+        cents = _ivf_centroids(sample, n_cells)
+        books = _pq_codebooks(sample, m_sub, n_codes)
+        _write_model_tables(spark, root, cents, books)
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        _encode_with_models(emb, cents, books).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(f"{root}/enc")
+        return root
+
+    params = {"n_cells": n_cells, "m_sub": m_sub, "n_codes": n_codes}
+    return ARTIFACTS.get(spark, "ann-idx", sf_dir, params, build)
 
 
 def _encode_with_models(emb: DataFrame, cents, books) -> DataFrame:
@@ -810,43 +788,26 @@ def build_ann_index_split(
     Probes read base ∪ overlay, both partition-pruned to the probed
     cells. Re-training (drift) is a separate decision gated by
     :func:`ann_overlay_drift`. Memoized per (app, sf_dir, params)."""
-    import os as _os
 
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
+    def build(root: str) -> tuple[str, str]:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        base_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD != 0)
+        batch_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
+        # frozen model: trained on the nightly corpus only — the batch
+        # must not influence the quantizer (that's what the drift gate is for)
+        sample = _sample_matrix_frame(base_emb)
+        cents = _ivf_centroids(sample, n_cells)
+        books = _pq_codebooks(sample, m_sub, n_codes)
+        base, overlay = f"{root}/base", f"{root}/overlay"
+        _write_model_tables(spark, base, cents, books)
+        for tree, part in ((base, base_emb), (overlay, batch_emb)):
+            _encode_with_models(part, cents, books).write.mode("overwrite").partitionBy(
+                "cell"
+            ).parquet(f"{tree}/enc")
+        return base, overlay
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        n_cells,
-        m_sub,
-        n_codes,
-        "split",
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    base_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD != 0)
-    batch_emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
-    # frozen model: trained on the nightly corpus only — the batch must
-    # not influence the quantizer (that's what the drift gate is for)
-    sample = _sample_matrix_frame(base_emb)
-    cents = _ivf_centroids(sample, n_cells)
-    books = _pq_codebooks(sample, m_sub, n_codes)
-    base = _scratch_dir(spark, "ann-base", sf_dir)
-    overlay = _scratch_dir(spark, "ann-overlay", sf_dir)
-    _write_model_tables(spark, base, cents, books)
-    _encode_with_models(base_emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{base}/enc")
-    _encode_with_models(batch_emb, cents, books).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{overlay}/enc")
-    out = (base, overlay)
-    _ANN_INDEX_CACHE[key] = out
-    return out
+    params = {"n_cells": n_cells, "m_sub": m_sub, "n_codes": n_codes}
+    return ARTIFACTS.get(spark, "ann-split", sf_dir, params, build)
 
 
 #: Declared schema of the persisted inverted lists (`cell` is the
@@ -888,54 +849,9 @@ def ivf_probe_topk_maintained(
 
     Output: (query_id, neighbor_id, rn) — same shape as knn_topk.
     """
-    import numpy as np
-
     base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
-    cents, _books = _load_ann_model(spark, base)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < n_queries).collect(), key=lambda r: r[0]
-    )
-    if not qrows or not len(cents):
-        return spark.createDataFrame(
-            [], "query_id BIGINT, neighbor_id BIGINT, rn BIGINT"
-        )
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    cells = np.argsort(-(qn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-    probed = sorted({int(c) for row in cells for c in row})
-    q = spark.createDataFrame(
-        [
-            (int(r[0]), int(c), [float(x) for x in r[1]])
-            for r, row in zip(qrows, cells)
-            for c in row
-        ],
-        "query_id BIGINT, cell BIGINT, qv ARRAY<FLOAT>",
-    )
-    lists = (
-        _read_enc(spark, f"{base}/enc", f"{overlay}/enc")
-        .filter(F.col("cell").isin(probed))  # static ⇒ partition-pruned
-        .select(F.col("vec_id").alias("neighbor_id"), "cell", "embedding")
-    )
-    vd = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(vd(c), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    dot = F.aggregate(
-        F.zip_with(vd("qv"), vd("embedding"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        lists.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.col("rn").cast("long").alias("rn"))
+    return _ivf_probe_roots(
+        spark, sf_dir, base, n_queries, k, n_probe, enc_roots=(f"{base}/enc", f"{overlay}/enc")
     )
 
 
@@ -1013,32 +929,19 @@ def compact_ann_index(spark: SparkSession, sf_dir: str, n_cells: int = 32) -> st
     per-row encodings are deterministic given frozen models, the
     compacted tree's row set is bit-for-bit base ∪ overlay
     (test-pinned)."""
-    import os as _os
 
-    from flink_project_userbehavioranalysis_spark.operators.maintenance import (
-        _scratch_dir,
-    )
+    def build(root: str) -> str:
+        base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
+        _read_enc(spark, f"{base}/enc", f"{overlay}/enc").write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(f"{root}/enc")
+        for tbl in ("centroids", "codebooks"):
+            spark.read.parquet(f"{base}/{tbl}").write.mode("overwrite").parquet(
+                f"{root}/{tbl}"
+            )
+        return root
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        n_cells,
-        "compact",
-    )
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    base, overlay = build_ann_index_split(spark, sf_dir, n_cells=n_cells)
-    root = _scratch_dir(spark, "ann-compacted", sf_dir)
-    _read_enc(spark, f"{base}/enc", f"{overlay}/enc").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{root}/enc")
-    for tbl in ("centroids", "codebooks"):
-        spark.read.parquet(f"{base}/{tbl}").write.mode("overwrite").parquet(
-            f"{root}/{tbl}"
-        )
-    _ANN_INDEX_CACHE[key] = root
-    return root
+    return ARTIFACTS.get(spark, "ann-compacted", sf_dir, {"n_cells": n_cells}, build)
 
 
 def ivf_probe_topk_compacted(
@@ -1117,6 +1020,9 @@ def _ivf_probe_roots(
         lists.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
+        # no pair dedup needed: every vector lives in exactly ONE cell
+        # and a query's probed cells are distinct, so each (query,
+        # neighbor) pair joins at most once
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -1388,57 +1294,8 @@ def ivf_probe_topk(
 
     Output: (query_id, neighbor_id, rn) — same shape as knn_topk.
     """
-    import numpy as np
-
-    root = build_ann_index(spark, sf_dir, n_cells=n_cells)
-    cents, _books = _load_ann_model(spark, root)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < n_queries).collect(), key=lambda r: r[0]
-    )
-    if not qrows or not len(cents):
-        return spark.createDataFrame(
-            [], "query_id BIGINT, neighbor_id BIGINT, rn BIGINT"
-        )
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    cells = np.argsort(-(qn @ cents.T), axis=1)[:, :n_probe].astype(np.int64)
-    probed = sorted({int(c) for row in cells for c in row})
-    q = spark.createDataFrame(
-        [
-            (int(r[0]), int(c), [float(x) for x in r[1]])
-            for r, row in zip(qrows, cells)
-            for c in row
-        ],
-        "query_id BIGINT, cell BIGINT, qv ARRAY<FLOAT>",
-    )
-    lists = (
-        _read_enc(spark, f"{root}/enc")
-        .filter(F.col("cell").isin(probed))  # static ⇒ partition-pruned
-        .select(F.col("vec_id").alias("neighbor_id"), "cell", "embedding")
-    )
-    vd = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(vd(c), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    dot = F.aggregate(
-        F.zip_with(vd("qv"), vd("embedding"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        lists.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("score", F.round(dot / (nrm("qv") * nrm("embedding")), 9))
-        # no pair dedup needed: every vector lives in exactly ONE cell
-        # and a query's probed cells are distinct, so each (query,
-        # neighbor) pair joins at most once
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.col("rn").cast("long").alias("rn"))
+    return _ivf_probe_roots(
+        spark, sf_dir, build_ann_index(spark, sf_dir, n_cells=n_cells), n_queries, k, n_probe
     )
 
 

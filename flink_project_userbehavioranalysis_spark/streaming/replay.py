@@ -33,15 +33,15 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import tempfile
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.io import load_table, normalize_events
-
-# (session id, sf_dir, n_chunks, sentinel) → prepared chunk dir
-_CHUNK_CACHE: dict[tuple, str] = {}
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
 
 SENTINEL_TYPE = "__sentinel__"
 # Width of each micro-batch changelog write in run_update_merge: small
@@ -79,55 +79,100 @@ def stream_shuffle_partitions(spark: SparkSession):
 _SENTINEL_GAP_NS = 10 * 365 * 24 * 3600 * 1_000_000_000  # ~10 years
 
 
+def replay_chunks(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    frame: Callable[[], DataFrame],
+    n_chunks: int,
+    params: dict,
+    tail: Callable[[int], DataFrame] | None = None,
+    scramble: bool = False,
+) -> str:
+    """Write ``frame()`` as ``n_chunks`` single-file parquets, chunk k
+    holding the k-th range of its integer ``_key`` column (dropped on
+    write), in one flat directory whose file mtimes give the replay
+    order, and return it. Memoized in the session store under (kind,
+    sf_dir, params + n_chunks/scramble); ``frame`` and ``tail`` run
+    only on a miss.
+
+    The file source picks up files in (modification time, path) order,
+    so with ``maxFilesPerTrigger=1`` each chunk is one micro-batch and
+    replay approximates an in-order stream (watermarks handle residual
+    disorder, as they would in production). ``tail(max_key)`` is one
+    extra frame written after the last range (the end-of-input
+    sentinel). ``scramble=True`` replays the second range *last* — but
+    always before the tail, which must stay last — a whole chunk of
+    genuinely late data."""
+
+    def build(root: str) -> str:
+        shutil.rmtree(root, ignore_errors=True)
+        df = frame()
+        lo, hi = df.select(F.min("_key"), F.max("_key")).first()
+        lo, hi = lo or 0, hi or 0
+        step = max((hi - lo) // n_chunks + 1, 1)
+        key = F.col("_key")
+        parts = [
+            df.filter((key >= lo + k * step) & (key < lo + (k + 1) * step)).drop("_key")
+            for k in range(n_chunks)
+        ]
+        if tail is not None:
+            parts.append(tail(hi))
+        staging = os.path.join(root, "_staging")
+        for k, part in enumerate(parts):
+            part.coalesce(1).write.mode("overwrite").parquet(f"{staging}/c{k:03d}")
+        # flatten: the streaming parquet source does NOT recurse into
+        # subdirectories — move each chunk's part file up
+        flat = []
+        for sub in sorted(os.listdir(staging)):
+            subdir = os.path.join(staging, sub)
+            for f in sorted(os.listdir(subdir)):
+                if f.endswith(".parquet"):
+                    dst = os.path.join(root, f"{len(flat):03d}.parquet")
+                    os.rename(os.path.join(subdir, f), dst)
+                    flat.append(dst)
+        shutil.rmtree(staging)
+        order = list(range(len(flat)))
+        if scramble and len(flat) > 3:
+            last = order.pop() if tail is not None else None
+            order.append(order.pop(1))
+            if last is not None:
+                order.append(last)
+        base = 1_700_000_000
+        for pos, i in enumerate(order):
+            os.utime(flat[i], (base + pos * 10, base + pos * 10))
+        return root
+
+    return ARTIFACTS.get(
+        spark, kind, sf_dir, {**params, "n_chunks": n_chunks, "scramble": scramble}, build
+    )
+
+
 def _prepare_chunks(
     spark: SparkSession, sf_dir: str, n_chunks: int, sentinel: bool, scramble: bool = False
 ) -> str:
-    """Write events as n_chunks single-file parquets named in ts order.
-
-    The file source picks up files in (modification time, path) order;
-    chunk k holds the k-th time-range of rows, so replay approximates
-    an in-order stream (watermarks handle residual disorder, as they
-    would in production). ``scramble=True`` replays the second time
-    range *last* — a whole chunk of genuinely late data, used to
-    exercise T6/T7 drop semantics deterministically."""
-    # applicationId, not id(spark): id() can be recycled after a stopped
-    # session is collected, resurrecting paths from a dead session's run
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), n_chunks, sentinel, scramble)
-    if key in _CHUNK_CACHE:
-        return _CHUNK_CACHE[key]
-    out_dir = tempfile.mkdtemp(prefix="ubx-replay-")
-    raw = load_table(spark, sf_dir, "events")
-    # Chunk boundaries are computed on a derived BIGINT-nanos key so the
-    # range arithmetic is identical whether the raw ts column is BIGINT
-    # nanos or native timestamp[us] (both testdata generations exist).
+    """The events table as time-ordered replay chunks. Chunk
+    boundaries are computed on a BIGINT-nanos key so the range
+    arithmetic is identical whether the raw ts column is BIGINT nanos
+    or native timestamp[us] (both testdata generations exist)."""
     from pyspark.sql.types import LongType
 
-    ts_is_long = isinstance(raw.schema["ts"].dataType, LongType)
-    key_col = (
-        F.col("ts")
-        if ts_is_long
-        else F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
-    )
-    keyed = raw.withColumn("_ts_key", key_col)
-    bounds = keyed.select(
-        F.min("_ts_key").alias("lo"), F.max("_ts_key").alias("hi")
-    ).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-    step = max((hi - lo) // n_chunks + 1, 1)
-    for k in range(n_chunks):
-        chunk = keyed.filter(
-            (F.col("_ts_key") >= lo + k * step) & (F.col("_ts_key") < lo + (k + 1) * step)
-        ).drop("_ts_key")
-        chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{k:03d}")
-    if sentinel:
+    def keyed() -> DataFrame:
+        raw = load_table(spark, sf_dir, "events")
+        if isinstance(raw.schema["ts"].dataType, LongType):
+            return raw.withColumn("_key", F.col("ts"))
+        return raw.withColumn("_key", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000))
+
+    def sentinel_row(hi: int) -> DataFrame:
+        schema = load_table(spark, sf_dir, "events").schema
         far_ns = hi + _SENTINEL_GAP_NS
-        if ts_is_long:
+        if isinstance(schema["ts"].dataType, LongType):
             far = far_ns
         else:
             import datetime as _dt
 
             far = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=far_ns // 1000)
-        srow = spark.createDataFrame(
+        return spark.createDataFrame(
             [
                 {
                     "event_id": -1,
@@ -138,35 +183,19 @@ def _prepare_chunks(
                     "props": "{}",
                 }
             ],
-            schema=raw.schema,
+            schema=schema,
         )
-        srow.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{n_chunks:03d}")
-    # flatten: move part files up so maxFilesPerTrigger=1 sees one file/chunk
-    final_dir = tempfile.mkdtemp(prefix="ubx-replay-flat-")
-    flat = []
-    idx = 0
-    for sub in sorted(os.listdir(out_dir)):
-        subdir = os.path.join(out_dir, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(final_dir, f"{idx:03d}.parquet")
-                os.rename(os.path.join(subdir, f), dst)
-                flat.append(dst)
-                idx += 1
-    # deterministic replay order via explicit mtimes (the file source
-    # processes oldest-mtime first); scramble moves chunk #1 to the
-    # end — but always before the sentinel, which must stay last
-    order = list(range(len(flat)))
-    if scramble and len(flat) > 3:
-        last = order.pop() if sentinel else None
-        order.append(order.pop(1))
-        if last is not None:
-            order.append(last)
-    base = 1_700_000_000
-    for pos, i in enumerate(order):
-        os.utime(flat[i], (base + pos * 10, base + pos * 10))
-    _CHUNK_CACHE[key] = final_dir
-    return final_dir
+
+    return replay_chunks(
+        spark,
+        "replay",
+        sf_dir,
+        keyed,
+        n_chunks,
+        {"sentinel": sentinel},
+        tail=sentinel_row if sentinel else None,
+        scramble=scramble,
+    )
 
 
 def events_stream(

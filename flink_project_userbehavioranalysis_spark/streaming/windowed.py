@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from flink_project_userbehavioranalysis_spark.streaming.replay import (
     events_stream,
+    replay_chunks,
     run_update_merge,
 )
 
@@ -612,9 +613,6 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> Dat
     return run_append_memory(pii_scrub_projection(ev), "pii_scrub_stream", spark)
 
 
-_DOC_CHUNK_CACHE: dict[tuple, str] = {}
-
-
 def docs_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -626,50 +624,25 @@ def docs_stream(
     as a stream — the ingestion-feed twin of `replay.events_stream`.
     Documents carry no event time, so one is synthesized as
     epoch + doc_id seconds (ingestion order = id order, the way a real
-    feed stamps arrival time); chunks are doc_id ranges written in
-    order so the file source replays them as an in-order stream."""
-    import os
-    import tempfile
-
+    feed stamps arrival time); chunks are doc_id ranges replayed in
+    order (`replay.replay_chunks`)."""
     from flink_project_userbehavioranalysis_spark.io import load_table
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), min_doc_id, n_chunks)
-    if key not in _DOC_CHUNK_CACHE:
-        out_dir = tempfile.mkdtemp(prefix="ubx-docs-replay-")
-        docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") >= min_doc_id
-        )
-        bounds = docs.select(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        step = max(((hi or 0) - (lo or 0)) // n_chunks + 1, 1)
-        for k in range(n_chunks):
-            chunk = docs.filter(
-                (F.col("doc_id") >= (lo or 0) + k * step)
-                & (F.col("doc_id") < (lo or 0) + (k + 1) * step)
-            )
-            chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{k:03d}")
-        # flatten: the streaming parquet source does NOT recurse into
-        # subdirectories — move each chunk's part file up with ordered
-        # mtimes so maxFilesPerTrigger=1 replays them in doc_id order
-        # (same layout contract as replay._prepare_chunks)
-        flat_dir = tempfile.mkdtemp(prefix="ubx-docs-replay-flat-")
-        idx = 0
-        for sub in sorted(os.listdir(out_dir)):
-            subdir = os.path.join(out_dir, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(flat_dir, f"{idx:03d}.parquet")
-                    os.rename(os.path.join(subdir, f), dst)
-                    os.utime(dst, (1_700_000_000 + idx * 10, 1_700_000_000 + idx * 10))
-                    idx += 1
-        _DOC_CHUNK_CACHE[key] = flat_dir
+    chunk_dir = replay_chunks(
+        spark,
+        "docs-replay",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") >= min_doc_id)
+        .withColumn("_key", F.col("doc_id")),
+        n_chunks,
+        {"min_doc_id": min_doc_id},
+    )
     schema = load_table(spark, sf_dir, "documents").schema
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_DOC_CHUNK_CACHE[key])
+        .parquet(chunk_dir)
     )
     ts = F.timestamp_seconds(F.col("doc_id"))
     return raw.withColumn("ts", ts).withWatermark("ts", watermark)
@@ -1291,9 +1264,6 @@ def value_percentiles_ddsketch_stream(
     return ddsketch_quantiles_from_grid(merged, gamma)
 
 
-_EMB_CHUNK_CACHE: dict[tuple, str] = {}
-
-
 def embeddings_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -1305,51 +1275,24 @@ def embeddings_stream(
     maxFilesPerTrigger=1). ``only_overlay`` replays just the
     maintained-ANN lifecycle's ingest batch (vec_id % 5 = 0) — the
     vectors whose at-ingest encode the streaming twin maintains."""
-    import os
-    import tempfile
-
     from flink_project_userbehavioranalysis_spark.io import load_table
     from flink_project_userbehavioranalysis_spark.operators.similarity import (
         _ANN_SPLIT_MOD,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        only_overlay,
-        n_chunks,
-    )
-    if key not in _EMB_CHUNK_CACHE:
+    def keyed() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         if only_overlay:
             emb = emb.filter(F.col("vec_id") % _ANN_SPLIT_MOD == 0)
-        bounds = emb.select(
-            F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-        ).collect()[0]
-        lo, hi = bounds["lo"] or 0, bounds["hi"] or 0
-        step = max((hi - lo) // n_chunks + 1, 1)
-        flat_dir = tempfile.mkdtemp(prefix="ubx-emb-replay-")
-        idx = 0
-        out_dir = tempfile.mkdtemp(prefix="ubx-emb-chunks-")
-        for c in range(n_chunks):
-            chunk = emb.filter(
-                (F.col("vec_id") >= lo + c * step)
-                & (F.col("vec_id") < lo + (c + 1) * step)
-            )
-            chunk.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/c{c:03d}")
-        for sub in sorted(os.listdir(out_dir)):
-            subdir = os.path.join(out_dir, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    dst = os.path.join(flat_dir, f"{idx:03d}.parquet")
-                    os.rename(os.path.join(subdir, f), dst)
-                    os.utime(dst, (1_700_000_000 + idx * 10, 1_700_000_000 + idx * 10))
-                    idx += 1
-        _EMB_CHUNK_CACHE[key] = flat_dir
+        return emb.withColumn("_key", F.col("vec_id"))
+
+    chunk_dir = replay_chunks(
+        spark, "emb-replay", sf_dir, keyed, n_chunks, {"only_overlay": only_overlay}
+    )
     return (
         spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", 1)
-        .parquet(_EMB_CHUNK_CACHE[key])
+        .parquet(chunk_dir)
     )
 
 

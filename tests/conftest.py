@@ -20,7 +20,8 @@ def pytest_addoption(parser):
 
 
 def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get("SPARK_GRAFT_RUNSLOW"):
+    runslow_env = os.environ.get("SPARK_GRAFT_RUNSLOW", "").strip().lower()
+    if config.getoption("--runslow") or runslow_env in ("1", "true", "yes", "on"):
         return
     skip = pytest.mark.skip(
         reason="slow: opt in with --runslow / SPARK_GRAFT_RUNSLOW=1 "

@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from flink_project_userbehavioranalysis_spark import layout
 from flink_project_userbehavioranalysis_spark.io import load_events
 from flink_project_userbehavioranalysis_spark.operators import maintenance as mt
+from flink_project_userbehavioranalysis_spark.session import ARTIFACTS
 
 
 def _part_files(path: str) -> dict[str, set[str]]:
@@ -123,7 +124,7 @@ def test_erase_users_roundtrip(spark, sf_dir):
     assert sum(r["n"] for r in rows) == n_total - n_blocked
     assert sum(r["n_erased"] for r in rows) == n_blocked
     # the written store itself (not just the aggregate) is clean
-    path = M._scratch_dir(spark, "erase", sf_dir)
+    path = ARTIFACTS.scratch_dir(spark, "erase", sf_dir)
     back = spark.read.parquet(path)
     assert back.filter(F.col("user_id") % 101 == 0).count() == 0
     assert back.count() == n_total - n_blocked
@@ -161,7 +162,7 @@ def test_erase_users_total_over_null_user(spark, sf_dir, tmp_path):
 
     df = M.erase_users_roundtrip(spark, str(d))
     assert_matches_oracle(df, M.erase_users_oracle_sql(), str(d))
-    back = spark.read.parquet(M._scratch_dir(spark, "erase", str(d)))
+    back = spark.read.parquet(ARTIFACTS.scratch_dir(spark, "erase", str(d)))
     assert back.filter(F.col("user_id").isNull()).count() == 3  # kept
     assert back.filter(F.col("user_id") % 101 == 0).count() == 0  # erased
 
@@ -346,7 +347,7 @@ def test_export_shards_roundtrip(spark, sf_dir):
 
     df = MT.export_shards_roundtrip(spark, sf_dir, buckets=8)
     assert_matches_oracle(df, MT.export_shards_oracle_sql(buckets=8), sf_dir)
-    out = MT._scratch_dir(spark, "shards", sf_dir)
+    out = ARTIFACTS.scratch_dir(spark, "shards", sf_dir)
     dirs = {os.path.basename(p) for p in glob.glob(os.path.join(out, "shard=*"))}
     assert dirs == {f"shard={k}" for k in range(8)}
     n_docs = df.agg({"n_docs": "sum"}).collect()[0][0]
